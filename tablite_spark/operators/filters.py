@@ -156,25 +156,17 @@ def python_expression_mask(df: DataFrame, expression: str,
 
 
 def filter_pass_fail(df: DataFrame, expressions: list[dict] | str,
-                     filter_type: str = "all",
-                     single_pass: bool = False) -> tuple[DataFrame, DataFrame]:
+                     filter_type: str = "all") -> tuple[DataFrame, DataFrame]:
     """``Table.filter`` twin output (tablite/core.py:343-364).
 
-    Default: two filtered plans over the source — Catalyst pushes each
+    Two filtered plans over the source — Catalyst pushes each
     predicate into its own scan, and a parquet/cached source reads
-    twice but cheaply (column-pruned, predicate-paged). With
-    ``single_pass=True`` the input is persisted so the scan runs once
-    and both sides reuse it — right when the source is an expensive
-    upstream computation rather than a raw scan. (SURVEY §7 hard part
-    4: the reference writes both sides in one pass by construction;
-    Spark's equivalent is plan reuse via persist, not a custom sink.)
+    twice but cheaply (column-pruned, predicate-paged).
     """
     if isinstance(expressions, str):
         mask = mask_from_string(expressions, df)
     else:
         mask = mask_from_expressions(df, expressions, filter_type)
-    if single_pass:
-        df = df.persist()
     # null mask (e.g. comparison against NULL) goes to the fail side,
     # matching the reference where a non-True evaluation fails the row.
     return df.filter(mask), df.filter(~F.coalesce(mask, F.lit(False)))

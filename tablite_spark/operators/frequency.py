@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from tablite_spark.plans.lifecycle import pinned
+
 
 def heavy_hitters(df: DataFrame, col: str, phi: float,
                   capacity: int | None = None) -> DataFrame:
@@ -89,17 +91,13 @@ def heavy_hitters(df: DataFrame, col: str, phi: float,
         out["is_total"] = [False] * (len(out) - 1) + [True]
         yield out[["value", "is_total", "cnt"]]
 
-    from pyspark import StorageLevel
-    pass1 = (df.select(col).mapInPandas(mg, schema)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
+    pass1 = df.select(col).mapInPandas(mg, schema)
+    with pinned(pass1):
         n = (pass1.filter(F.col("is_total"))
              .agg(F.sum("cnt").alias("n_")).collect()[0]["n_"]) or 0
         cand_rows = (pass1.filter(~F.col("is_total"))
                      .select(F.col("value").alias(col)).distinct()
                      .collect())
-    finally:
-        pass1.unpersist()
     spark = df.sparkSession
     cands = spark.createDataFrame(
         cand_rows, StructType([StructField(col, vtype)]))
@@ -160,38 +158,37 @@ def association_rules(df: DataFrame, basket_col: str, item_col: str,
     # r14 optimization round (guide §2.1): base feeds the support
     # census, the basket count and BOTH self-join sides — unpinned,
     # the scan + distinct (+ cap semi-join) re-ran per reference.
-    # One pin, the size class the self-join shuffles anyway. r15:
-    # persist (lazy) instead of localCheckpoint — the eager
-    # checkpoint job cost MORE than it saved at fixture scale where
-    # AQE turns the replays into cheap broadcasts (r14 VERDICT item
-    # 4); persist fills the cache inside the first job that needs
-    # the frame, keeps the at-scale pin, and leaves the lineage
-    # visible to the plan audit (the q2 discipline).
-    base = base.persist()
-    supp = base.groupBy(F.col("__i__").alias("item")).agg(
-        F.count(F.lit(1)).alias("s"))
-    nb = base.agg(F.countDistinct("__b__").alias("n_baskets"))
-    l = base.select("__b__", F.col("__i__").alias("a"))
-    r = base.select(F.col("__b__").alias("__b2__"),
-                    F.col("__i__").alias("b"))
-    pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
-                    & (F.col("a") != F.col("b")))
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("support"))
-             .filter(F.col("support") >= min_support))
-    out = (pairs
-           .join(supp.select(F.col("item").alias("a"),
-                             F.col("s").alias("__sa__")), "a")
-           .join(supp.select(F.col("item").alias("b"),
-                             F.col("s").alias("__sb__")), "b")
-           .crossJoin(F.broadcast(nb)))
-    conf = F.col("support").cast("double") / F.col("__sa__")
-    lift = (F.col("n_baskets").cast("double") * F.col("support")
-            / (F.col("__sa__").cast("double") * F.col("__sb__")))
-    return (out.select("a", "b", "support", conf.alias("confidence"),
-                       lift.alias("lift"))
-            .orderBy(F.col("lift").desc(), "a", "b")
-            .limit(k))
+    # One pin, the size class the self-join shuffles anyway; a lazy
+    # persist fills inside the first job that reads it (r15: an eager
+    # checkpoint of base cost more than it saved at fixture scale).
+    # The <= k result rows are checkpointed inside the pin, so the
+    # pin releases before returning.
+    with pinned(base):
+        supp = base.groupBy(F.col("__i__").alias("item")).agg(
+            F.count(F.lit(1)).alias("s"))
+        nb = base.agg(F.countDistinct("__b__").alias("n_baskets"))
+        l = base.select("__b__", F.col("__i__").alias("a"))
+        r = base.select(F.col("__b__").alias("__b2__"),
+                        F.col("__i__").alias("b"))
+        pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
+                        & (F.col("a") != F.col("b")))
+                 .groupBy("a", "b")
+                 .agg(F.count(F.lit(1)).alias("support"))
+                 .filter(F.col("support") >= min_support))
+        out = (pairs
+               .join(supp.select(F.col("item").alias("a"),
+                                 F.col("s").alias("__sa__")), "a")
+               .join(supp.select(F.col("item").alias("b"),
+                                 F.col("s").alias("__sb__")), "b")
+               .crossJoin(F.broadcast(nb)))
+        conf = F.col("support").cast("double") / F.col("__sa__")
+        lift = (F.col("n_baskets").cast("double") * F.col("support")
+                / (F.col("__sa__").cast("double") * F.col("__sb__")))
+        return (out.select("a", "b", "support",
+                           conf.alias("confidence"), lift.alias("lift"))
+                .orderBy(F.col("lift").desc(), "a", "b")
+                .limit(k)
+                .localCheckpoint())
 
 
 def item_cosine(df: DataFrame, basket_col: str, item_col: str,
@@ -233,30 +230,32 @@ def item_cosine(df: DataFrame, basket_col: str, item_col: str,
                  .filter(F.col("__sz__") <= max_basket_size)
                  .select("__b__"))
         base = base.join(small, "__b__", "left_semi")
-    # pinned (lazily) for the same reason as association_rules above
-    base = base.persist()
-    supp = base.groupBy(F.col("__i__").alias("item")).agg(
-        F.count(F.lit(1)).alias("s"))
-    l = base.select("__b__", F.col("__i__").alias("a"))
-    r = base.select(F.col("__b__").alias("__b2__"),
-                    F.col("__i__").alias("b"))
-    pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
-                    & (F.col("a") != F.col("b")))
-             .groupBy("a", "b")
-             .agg(F.count(F.lit(1)).alias("co"))
-             .filter(F.col("co") >= min_support))
-    scored = (pairs
-              .join(supp.select(F.col("item").alias("a"),
-                                F.col("s").alias("__sa__")), "a")
-              .join(supp.select(F.col("item").alias("b"),
-                                F.col("s").alias("__sb__")), "b")
-              .withColumn("cosine",
-                          F.col("co") / F.sqrt(
-                              (F.col("__sa__") * F.col("__sb__"))
-                              .cast("double"))))
-    w = Window.partitionBy("a").orderBy(F.col("cosine").desc(),
-                                        F.col("b").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
-            .select("a", "b", "co", "cosine",
-                    F.col("rank").cast("int").alias("rank")))
+    # pinned for the same reason as association_rules above; the
+    # <= top_k rows per item are checkpointed inside the pin
+    with pinned(base):
+        supp = base.groupBy(F.col("__i__").alias("item")).agg(
+            F.count(F.lit(1)).alias("s"))
+        l = base.select("__b__", F.col("__i__").alias("a"))
+        r = base.select(F.col("__b__").alias("__b2__"),
+                        F.col("__i__").alias("b"))
+        pairs = (l.join(r, (F.col("__b__") == F.col("__b2__"))
+                        & (F.col("a") != F.col("b")))
+                 .groupBy("a", "b")
+                 .agg(F.count(F.lit(1)).alias("co"))
+                 .filter(F.col("co") >= min_support))
+        scored = (pairs
+                  .join(supp.select(F.col("item").alias("a"),
+                                    F.col("s").alias("__sa__")), "a")
+                  .join(supp.select(F.col("item").alias("b"),
+                                    F.col("s").alias("__sb__")), "b")
+                  .withColumn("cosine",
+                              F.col("co") / F.sqrt(
+                                  (F.col("__sa__") * F.col("__sb__"))
+                                  .cast("double"))))
+        w = Window.partitionBy("a").orderBy(F.col("cosine").desc(),
+                                            F.col("b").asc())
+        return (scored.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= top_k)
+                .select("a", "b", "co", "cosine",
+                        F.col("rank").cast("int").alias("rank"))
+                .localCheckpoint())

@@ -11,8 +11,12 @@ All single-pass Spark aggregations (one job, partial aggs map-side).
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tablite_spark.plans.lifecycle import pinned, upstream_is_expensive
 
 
 _TEMPORAL = {"date", "timestamp", "timestamp_ntz"}
@@ -596,10 +600,8 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from pyspark import StorageLevel
-
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     base = df.select(*cols).filter(
         reduce(lambda a, b: a & b,
@@ -610,23 +612,14 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
     # are cheaper than a cache fill, so persisting there only adds
     # memory pressure and fill latency (measured: +8 s first call on
     # a 6M-row lineitem scan for zero steady-state gain)
-    # r15: analyzed() not optimizedPlan() — same tag decision, but
-    # without running the optimizer just for this probe (see
-    # pack_sequences; r14 VERDICT item 6)
-    opt = base._jdf.queryExecution().analyzed().toString()
-    expensive = any(t in opt for t in (
-        "Join", "Aggregate", "Window", "Generate", "Expand",
-        "Union", "MapInPandas", "FlatMapGroupsInPandas",
-        "MapGroups", "PythonUDF"))
-    if expensive:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    pin = pinned(base) if upstream_is_expensive(base) else nullcontext()
 
     def avg_ranks(c):
         vc = (base.groupBy(F.col(c).alias("__v__"))
               .agg(F.count(F.lit(1)).alias("__c__")))
         # the census feeds three jobs (bounds, offsets, rank join) —
         # pin it so the corpus scan + census shuffle run once
-        vc = pin_census(vc)
+        vc = vc.localCheckpoint()
         vc = with_range_bucket(vc, "__v__", "__p__")
         w = (Window.partitionBy("__p__").orderBy("__v__")
              .rowsBetween(Window.unboundedPreceding,
@@ -646,7 +639,7 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
                           rank.alias(f"__r_{c}__")), ndistinct)
 
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    try:
+    with pin:
         # r14 optimization round (guide §2.2): each column's rank
         # derivation runs two driver-blocking jobs (the range-bound
         # pass + the |buckets|-row offset collect) — k columns paid
@@ -681,9 +674,6 @@ def spearman_corr(df: DataFrame, cols: list[str]) -> DataFrame:
             aggs.append(rho.alias(f"c__{a}__{b}"))
         aggs.append(F.count(F.lit(1)).alias("__n__"))
         row = ranked.agg(*aggs).collect()[0]   # exactly ONE row
-    finally:
-        if expensive:
-            base.unpersist()
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
     )
@@ -725,7 +715,7 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -734,7 +724,7 @@ def ks_test_2sample(df: DataFrame, group_col: str, val_col: str,
                  .alias("__ca__"),
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__v__", "__p__")
     w = (Window.partitionBy("__p__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -949,7 +939,7 @@ def km_curve(df: DataFrame, duration_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -958,7 +948,7 @@ def km_curve(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1015,7 +1005,7 @@ def nelson_aalen(df: DataFrame, duration_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1024,7 +1014,7 @@ def nelson_aalen(df: DataFrame, duration_col: str,
             .groupBy(t.alias("__t__"))
             .agg(F.count(F.when(obs, 1)).alias("__d__"),
                  F.count(F.when(~obs, 1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1068,7 +1058,7 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     v = F.col(col).cast("double")
     bad = df.filter(v < 0).limit(1).collect()
@@ -1078,7 +1068,7 @@ def inequality_metrics(df: DataFrame, col: str) -> DataFrame:
     cens = (df.filter(v.isNotNull())
             .groupBy(v.alias("__v__"))
             .agg(F.count(F.lit(1)).alias("__c__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__v__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1132,7 +1122,7 @@ def weighted_quantiles(df: DataFrame, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     if not qs:
         raise ValueError("weighted_quantiles requires at least one q")
@@ -1144,7 +1134,7 @@ def weighted_quantiles(df: DataFrame, val_col: str,
     cens = (df.filter(v.isNotNull() & w.isNotNull() & (w > 0))
             .groupBy(v.alias("__v__"))
             .agg(F.sum(w).alias("__w__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__v__", "__b__")
     win = (Window.partitionBy("__b__").orderBy("__v__")
            .rowsBetween(Window.unboundedPreceding,
@@ -1258,7 +1248,7 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t = F.col(duration_col)
     obs = (F.col(observed_col) if isinstance(observed_col, str)
@@ -1277,7 +1267,7 @@ def logrank_test(df: DataFrame, duration_col: str, observed_col,
                  F.count(F.when(obs & ~is_a, 1)).alias("__db__"),
                  F.count(F.when(is_a, 1)).alias("__na__"),
                  F.count(F.when(~is_a, 1)).alias("__nb__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1515,7 +1505,7 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     g, v = F.col(group_col), F.col(val_col)
     base = df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -1525,7 +1515,7 @@ def mann_whitney_u(df: DataFrame, group_col: str, val_col: str,
                  F.count(F.when(g == F.lit(group_b), 1))
                  .alias("__cb__")))
     cens = cens.withColumn("__ct__", F.col("__ca__") + F.col("__cb__"))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__v__", "__p__")
     w = (Window.partitionBy("__p__").orderBy("__v__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -81,9 +81,7 @@ def ohlc_resample(df: DataFrame, ts_col: str, val_col: str,
 def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
            user_col: str = "user_id",
            type_col: str = "event_type",
-           single_scan: bool = False,
-           within_seconds: int | None = None,
-           _materialize: bool = True) -> DataFrame:
+           within_seconds: int | None = None) -> DataFrame:
     """Ordered funnel: per user, the earliest time each successive
     step was completed STRICTLY AFTER the previous step's time
     (view -> click -> purchase). Returns one row per user who
@@ -99,42 +97,20 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
     (user, timestamp) pairs move, never the event payload or a
     per-user ordered window (which would serialize hot users).
 
-    Source-scan cost: the default lazy plan filters the events frame
-    once per step — each branch pushes ``type = step`` into the scan,
-    so on a type-partitioned (or dictionary-filtered parquet) source
+    Source-scan cost: the lazy plan filters the events frame once
+    per step — each branch pushes ``type = step`` into the scan, so
+    on a type-partitioned (or dictionary-filtered parquet) source
     every branch reads only its own step's rows and the total IO is
-    one logical pass. On an UNPARTITIONED source that is k physical
-    scans; pass ``single_scan=True`` to project+filter
-    ``type IN steps → (user, type, ts)`` once into a spilled cache
-    and feed every step from it — one scan of the relation total.
-    That path is EAGER (the chain materializes via localCheckpoint so
-    the cache can be released deterministically before returning; the
-    pinned result is one narrow row per step-0 user — release it with
-    :func:`tablite_spark.plans.lifecycle.unpersist_local_checkpoint`
-    when done). With ``_materialize=False`` the returned lazy chain
-    carries ``funnel_base`` / ``funnel_unpersist()`` attributes so
-    the caller can release the pinned base directly.
+    one logical pass.
     """
     if len(steps) < 1:
         raise ValueError("funnel needs at least one step")
     ts, u = F.col(ts_col), F.col(user_col)
     cols = [f"t_{s}" for s in steps]
-    base = None
-    if single_scan and len(steps) > 1:
-        from pyspark import StorageLevel
-        base = (events.filter(F.col(type_col).isin(list(steps)))
-                .select(u.alias("user_id_"),
-                        F.col(type_col).alias("type_"),
-                        ts.alias("ts_"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
 
-        def step_events(s):
-            return base.filter(F.col("type_") == s) \
-                       .select("user_id_", "ts_")
-    else:
-        def step_events(s):
-            return (events.filter(F.col(type_col) == s)
-                    .select(u.alias("user_id_"), ts.alias("ts_")))
+    def step_events(s):
+        return (events.filter(F.col(type_col) == s)
+                .select(u.alias("user_id_"), ts.alias("ts_")))
 
     cur = (step_events(steps[0])
            .groupBy("user_id_")
@@ -156,19 +132,7 @@ def funnel(events: DataFrame, steps: list[str], ts_col: str = "ts",
                .groupBy("user_id_")
                .agg(F.min("ts_").alias(cols[i])))
         cur = cur.join(nxt, "user_id_", "left")
-    cur = cur.withColumnRenamed("user_id_", user_col)
-    if base is not None and _materialize:
-        cur = cur.localCheckpoint()
-        base.unpersist()
-    elif base is not None:
-        # _materialize=False is the plan-gate hook: returns the lazy
-        # cache-fed chain. The caller owns releasing the pinned base
-        # — hand them the handle (``result.funnel_unpersist()``)
-        # so they never have to clearCache() the whole catalog.
-        cur.funnel_base = base
-        cur.funnel_unpersist = lambda blocking=False: \
-            base.unpersist(blocking)
-    return cur
+    return cur.withColumnRenamed("user_id_", user_col)
 
 
 def retention_cohorts(events: DataFrame, ts_col: str = "ts",
@@ -853,14 +817,14 @@ def cusum_changepoint(df: DataFrame, order_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     t, x = F.col(order_col), F.col(val_col)
     cens = (df.filter(t.isNotNull() & x.isNotNull())
             .groupBy(t.alias("__t__"))
             .agg(F.sum(x).alias("__x__"),
                  F.count(F.lit(1)).alias("__n__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__t__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__t__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -322,6 +322,7 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
     from tablite_spark.operators.spatial import grid_radius_join
     from tablite_spark.pipeline.dedup import connected_components
     from tablite_spark.plans.hints import maybe_broadcast
+    from tablite_spark.plans.lifecycle import pinned
     p = pts.select(F.col(id_col).alias("pid"),
                    F.col(x_col).alias("x"), F.col(y_col).alias("y"))
     # r14 optimization round: the neighbor-pair frame feeds the core
@@ -330,9 +331,8 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
     # shape re-ran the 9-cell self-join three times and carried
     # x/y/dist_sq it never read again); the core set / labels are
     # point-bounded with counted sizes, so their joins broadcast
-    nb = (grid_radius_join(p, p, eps)
-          .select("pid_l", "pid_r").persist())
-    try:
+    nb = grid_radius_join(p, p, eps).select("pid_l", "pid_r")
+    with pinned(nb):
         cnt = (nb.groupBy(F.col("pid_l").alias("pid"))
                .agg(F.count(F.lit(1)).alias("n_nb")))
         cores = (cnt.filter(F.col("n_nb") >= min_pts).select("pid")
@@ -369,8 +369,6 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
                    .unionByName(border.withColumn("role",
                                                   F.lit("border")))
                    .localCheckpoint())  # point-bounded; frees nb
-    finally:
-        nb.unpersist()
     return (p.select("pid")
             .join(labeled, "pid", "left")
             .select(F.col("pid").alias(id_col),

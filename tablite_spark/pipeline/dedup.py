@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tablite_spark.config import Config
-from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
+from tablite_spark.plans.lifecycle import pinned, unpersist_local_checkpoint
 
 
 def exact_dedup(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
@@ -399,58 +399,58 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.union(e.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst"))).distinct()
-    edges = edges.persist()
-    driver_valve = int(_os.environ.get(
-        "SPARK_GRAFT_CC_DRIVER_EDGES", str(1_000_000)))
-    n_edges = edges.count()
-    if n_edges <= driver_valve:
-        try:
+    with pinned(edges):
+        driver_valve = int(_os.environ.get(
+            "SPARK_GRAFT_CC_DRIVER_EDGES", str(1_000_000)))
+        n_edges = edges.count()
+        if n_edges <= driver_valve:
             return _cc_driver_union_find(edges)
-        finally:
-            edges.unpersist()
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("component", F.col("id")))
-    labels = labels.localCheckpoint(eager=True)
-    labels_ckpt = labels  # the checkpoint backing the label view
-    n_labels = labels.count()
-    changed = 1
-    for _ in range(max_iter):
-        # r14 optimization round: the label frame is node-bounded
-        # with its count in hand — broadcast it into BOTH the
-        # propagation join and the convergence comparison, and fold
-        # the comparison into the checkpointed round plan. The old
-        # round ran two sort-merge-joined jobs (~4 tiny shuffles);
-        # this one shuffles only the min-groupBy partials and reads
-        # the convergence flag off the already-materialized result.
-        lab_b = maybe_broadcast(labels, n_labels, 24)
-        neigh = (edges.join(lab_b, edges.src == labels.id)
-                 .select(F.col("dst").alias("id"), "component"))
-        merged = (neigh.unionByName(labels)
-                  .groupBy("id").agg(F.min("component").alias("component")))
-        new_labels = (merged.join(
-            maybe_broadcast(labels.select(F.col("id"),
-                                          F.col("component")
-                                          .alias("__old__")),
-                            n_labels, 24), "id")
-            .select("id", "component",
-                    (F.col("component") != F.col("__old__"))
-                    .alias("__moved__"))
-            .localCheckpoint(eager=True))
-        changed = new_labels.filter(F.col("__moved__")).limit(1).count()
-        # the superseded round's label blocks are dead once the new
-        # checkpoint holds — release them now, or the loop pins one
-        # (id, label) copy per round until the ContextCleaner happens
-        # to notice (plans.lifecycle). Lifecycle tracks the CHECKPOINT
-        # frame — the (id, component) view would be a no-op there.
-        unpersist_local_checkpoint(labels_ckpt)
-        labels_ckpt = new_labels
-        labels = new_labels.select("id", "component")
-        # n_labels is the node count — invariant across rounds (every
-        # node appears in edges both ways, so the union keeps the id
-        # set fixed); the count is NOT re-run per round
-        if changed == 0:
-            break
-    edges.unpersist()
+        labels = (edges.select(F.col("src").alias("id")).distinct()
+                  .withColumn("component", F.col("id")))
+        labels = labels.localCheckpoint(eager=True)
+        labels_ckpt = labels  # the checkpoint backing the label view
+        n_labels = labels.count()
+        changed = 1
+        for _ in range(max_iter):
+            # r14 optimization round: the label frame is node-bounded
+            # with its count in hand — broadcast it into BOTH the
+            # propagation join and the convergence comparison, and
+            # fold the comparison into the checkpointed round plan. The
+            # old round ran two sort-merge-joined jobs (~4 tiny
+            # shuffles); this one shuffles only the min-groupBy partials
+            # and reads the convergence flag off the already-
+            # materialized result.
+            lab_b = maybe_broadcast(labels, n_labels, 24)
+            neigh = (edges.join(lab_b, edges.src == labels.id)
+                     .select(F.col("dst").alias("id"), "component"))
+            merged = (neigh.unionByName(labels)
+                      .groupBy("id")
+                      .agg(F.min("component").alias("component")))
+            new_labels = (merged.join(
+                maybe_broadcast(labels.select(F.col("id"),
+                                              F.col("component")
+                                              .alias("__old__")),
+                                n_labels, 24), "id")
+                .select("id", "component",
+                        (F.col("component") != F.col("__old__"))
+                        .alias("__moved__"))
+                .localCheckpoint(eager=True))
+            changed = (new_labels.filter(F.col("__moved__"))
+                       .limit(1).count())
+            # the superseded round's label blocks are dead once the
+            # new checkpoint holds — release them now, or the loop pins
+            # one (id, label) copy per round until the ContextCleaner
+            # happens to notice (plans.lifecycle). Lifecycle tracks the
+            # CHECKPOINT frame — the (id, component) view would be a
+            # no-op there.
+            unpersist_local_checkpoint(labels_ckpt)
+            labels_ckpt = new_labels
+            labels = new_labels.select("id", "component")
+            # n_labels is the node count — invariant across rounds
+            # (every node appears in edges both ways, so the union keeps
+            # the id set fixed); the count is NOT re-run per round
+            if changed == 0:
+                break
     if changed != 0:
         # returning partially-propagated labels would silently
         # under-merge clusters (and under-delete in cluster_dedup)

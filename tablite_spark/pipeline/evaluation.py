@@ -40,7 +40,7 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import (
-        bucket_prefix_offsets, pin_census, with_range_bucket,
+        bucket_prefix_offsets, with_range_bucket,
     )
     s = F.col(score_col).cast("double")
     y = (F.col(label_col) if isinstance(label_col, str)
@@ -49,7 +49,7 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
             .groupBy(s.alias("__s__"))
             .agg(F.count(F.lit(1)).alias("__c__"),
                  F.count(F.when(y, 1)).alias("__p__")))
-    cens = pin_census(cens)
+    cens = cens.localCheckpoint()
     cens = with_range_bucket(cens, "__s__", "__b__")
     w = (Window.partitionBy("__b__").orderBy("__s__")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

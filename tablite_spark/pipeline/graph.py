@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tablite_spark.plans.hints import maybe_broadcast as _maybe_broadcast
-from tablite_spark.plans.lifecycle import unpersist_local_checkpoint
+from tablite_spark.plans.lifecycle import pinned, unpersist_local_checkpoint
 
 __all__ = ["pagerank", "triangle_count", "bfs_hops", "k_core",
            "hyperball", "temporal_bfs",
@@ -221,8 +221,8 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
     # its upstream build (which for the registry callers is a multi-
     # shuffle derivation from the corpus) every scan
     e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).persist()
-    try:
+                     F.col(dst_col).alias("dst"))
+    with pinned(e):
         nodes = (e.select(F.col("src").alias("node"))
                  .unionByName(e.select(F.col("dst").alias("node")))
                  .distinct())
@@ -279,8 +279,6 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
             # base_nodes' blocks)
             unpersist_local_checkpoint(base_nodes)
         return ranks.select("node", "rank")
-    finally:
-        e.unpersist()
 
 
 def triangle_count(edges: DataFrame, src_col: str,
@@ -310,69 +308,64 @@ def triangle_count(edges: DataFrame, src_col: str,
     und = (edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
            .select(F.least(a, b).alias("u"),
                    F.greatest(a, b).alias("v"))
-           .distinct().persist())
-    deg = None
-    try:
+           .distinct())
+    with pinned(und):
         n_edges = und.count()
         # the degree census feeds the orientation join AND the wedge
         # total — pin it so its union+groupBy pass runs once
         deg = (und.select(F.col("u").alias("n"))
                .unionAll(und.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-               .persist())
-        # orient each edge low-(degree, id) -> high-(degree, id);
-        # deg is node-bounded (<= 2|E| rows): broadcast it into both
-        # endpoint joins so und is never shuffled
-        du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-        e = (und.join(_maybe_broadcast(du, 2 * n_edges, 24), "u")
-             .join(_maybe_broadcast(dv, 2 * n_edges, 24), "v"))
-        lo_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        ori = e.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v"))
-            .alias("s"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u"))
-            .alias("t")).persist()
-        # wedges at the low endpoint: (s -> t1), (s -> t2), t1 < t2;
-        # a triangle exists iff {t1, t2} is an edge. Because wedges
-        # carry t1 < t2 and und is canonical (u < v), the closing-
-        # edge probe is und ITSELF — the old probe unioned BOTH
-        # orientations of ori (2|E| rows) to reach the same matches.
-        # Wedge leg and probe are |E|-bounded: broadcast them so the
-        # wedge fan-out streams through one stage with zero shuffles
-        # (the fallback keeps the shuffled joins for graphs past the
-        # budget)
-        w1 = ori.select(F.col("s"), F.col("t").alias("t1"))
-        w2 = ori.select(F.col("s"), F.col("t").alias("t2"))
-        wedges = (w1.join(_maybe_broadcast(w2, n_edges, 16), "s")
-                  .filter(F.col("t1") < F.col("t2")))
-        probe = und.select(F.col("u").alias("t1"),
-                           F.col("v").alias("t2"))
-        tri = (wedges.join(_maybe_broadcast(probe, n_edges, 16),
-                           ["t1", "t2"])
-               .agg(F.count(F.lit(1)).alias("n_triangles")))
-        stats = (deg.agg(F.count(F.lit(1)).alias("n_nodes"),
-                         F.sum(F.col("d") * (F.col("d") - 1) / 2)
-                         .cast("long").alias("n_wedges")))
-        nedges = und.agg(F.count(F.lit(1)).alias("n_edges"))
-        return (stats.crossJoin(F.broadcast(nedges))
-                .crossJoin(F.broadcast(tri))
-                .select("n_nodes", "n_edges", "n_triangles",
-                        "n_wedges",
-                        F.when(F.col("n_wedges") > 0,
-                               3.0 * F.col("n_triangles")
-                               / F.col("n_wedges"))
-                        .alias("clustering"))
-                .localCheckpoint())  # 1 row; lets the pins release
-    finally:
-        try:
-            ori.unpersist()
-        except NameError:  # counted 0 edges before ori was built
-            pass
-        if deg is not None:
-            deg.unpersist()
-        und.unpersist()
+               .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
+        with pinned(deg):
+            # orient each edge low-(degree, id) -> high-(degree, id);
+            # deg is node-bounded (<= 2|E| rows): broadcast it into
+            # both endpoint joins so und is never shuffled
+            du = deg.select(F.col("n").alias("u"),
+                            F.col("d").alias("du"))
+            dv = deg.select(F.col("n").alias("v"),
+                            F.col("d").alias("dv"))
+            e = (und.join(_maybe_broadcast(du, 2 * n_edges, 24), "u")
+                 .join(_maybe_broadcast(dv, 2 * n_edges, 24), "v"))
+            lo_first = (F.col("du") < F.col("dv")) | (
+                (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+            ori = e.select(
+                F.when(lo_first, F.col("u")).otherwise(F.col("v"))
+                .alias("s"),
+                F.when(lo_first, F.col("v")).otherwise(F.col("u"))
+                .alias("t"))
+            with pinned(ori):
+                # wedges at the low endpoint: (s -> t1), (s -> t2),
+                # t1 < t2; a triangle exists iff {t1, t2} is an edge.
+                # Because wedges carry t1 < t2 and und is canonical
+                # (u < v), the closing-edge probe is und ITSELF — the
+                # old probe unioned BOTH orientations of ori (2|E|
+                # rows) to reach the same matches. Wedge leg and probe
+                # are |E|-bounded: broadcast them so the wedge fan-out
+                # streams through one stage with zero shuffles (the
+                # fallback keeps the shuffled joins for graphs past
+                # the budget)
+                w1 = ori.select(F.col("s"), F.col("t").alias("t1"))
+                w2 = ori.select(F.col("s"), F.col("t").alias("t2"))
+                wedges = (w1.join(_maybe_broadcast(w2, n_edges, 16), "s")
+                          .filter(F.col("t1") < F.col("t2")))
+                probe = und.select(F.col("u").alias("t1"),
+                                   F.col("v").alias("t2"))
+                tri = (wedges.join(_maybe_broadcast(probe, n_edges, 16),
+                                   ["t1", "t2"])
+                       .agg(F.count(F.lit(1)).alias("n_triangles")))
+                stats = (deg.agg(F.count(F.lit(1)).alias("n_nodes"),
+                                 F.sum(F.col("d") * (F.col("d") - 1) / 2)
+                                 .cast("long").alias("n_wedges")))
+                nedges = und.agg(F.count(F.lit(1)).alias("n_edges"))
+                return (stats.crossJoin(F.broadcast(nedges))
+                        .crossJoin(F.broadcast(tri))
+                        .select("n_nodes", "n_edges", "n_triangles",
+                                "n_wedges",
+                                F.when(F.col("n_wedges") > 0,
+                                       3.0 * F.col("n_triangles")
+                                       / F.col("n_wedges"))
+                                .alias("clustering"))
+                        .localCheckpoint())  # 1 row; lets the pins release
 
 
 def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
@@ -399,8 +392,8 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
                         F.col(dst_col).alias("b"))
            .unionByName(edges.select(F.col(dst_col).alias("a"),
                                      F.col(src_col).alias("b")))
-           .distinct().persist())
-    try:
+           .distinct())
+    with pinned(und):
         if und.count() <= _driver_edge_valve():
             return _bfs_hops_driver(und, seeds, node_col, max_hops)
         dist = (seeds.select(F.col(node_col).alias("node")).distinct()
@@ -437,8 +430,6 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, src_col: str,
             frontier = nxt
         return dist.select("node", F.col("hops").cast("long")
                            .alias("hops"))
-    finally:
-        und.unpersist()
 
 
 def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
@@ -466,17 +457,14 @@ def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
                         F.col(dst_col).alias("b"))
            .unionByName(edges.select(F.col(dst_col).alias("a"),
                                      F.col(src_col).alias("b")))
-           .distinct().persist())
-    if und.count() <= _driver_edge_valve():
-        try:
+           .distinct())
+    with pinned(und):
+        if und.count() <= _driver_edge_valve():
             return _k_core_driver(und, k, max_rounds)
-        finally:
-            und.unpersist()
-    alive = (und.select(F.col("a").alias("node")).distinct()
-             .localCheckpoint())
-    alive_ckpt = alive  # the checkpoint backing the survivor view
-    n_alive = alive.count()
-    try:
+        alive = (und.select(F.col("a").alias("node")).distinct()
+                 .localCheckpoint())
+        alive_ckpt = alive  # the checkpoint backing the survivor view
+        n_alive = alive.count()
         for _ in range(max_rounds):
             # the survivor set is node-bounded and its count is in
             # hand from the convergence check: broadcast both
@@ -511,8 +499,6 @@ def k_core(edges: DataFrame, src_col: str, dst_col: str, k: int,
             n_alive = n_keep
         raise RuntimeError(
             f"k_core did not converge in {max_rounds} rounds")
-    finally:
-        und.unpersist()
 
 
 def hyperball(edges: DataFrame, src_col: str, dst_col: str,
@@ -548,60 +534,60 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
                         F.col(dst_col).alias("b"))
            .unionByName(edges.select(F.col(dst_col).alias("a"),
                                      F.col(src_col).alias("b")))
-           .distinct().persist())
-    h = F.conv(F.substring(F.md5(F.col("node").cast("string")),
-                           1, 15), 16, 10).cast("long")
-    # State is PACKED: one row per node holding all m registers as an
-    # int array (0 = register absent; a real rho is always >= 1).
-    # The skinny (node, register, rho) layout made every round shuffle
-    # |E| x m rows through the merge groupBy — 66M rows per round on a
-    # 520k-edge graph, measured as the entire hyperball cost. Packed,
-    # a round joins |E| rows against a node-bounded broadcast and
-    # shuffles <= |V| partial rows of m register maxes. The register
-    # math (hash, rho, element-wise max, the HLL estimator) is
-    # expression-for-expression the one the oracle replays.
-    state = (und.select(F.col("a").alias("node")).distinct()
-             .select("node",
-                     F.shiftright(h, rho_bits).cast("int")
-                     .alias("register"),
-                     h.bitwiseAND(F.lit(w_mask)).alias("__w__"))
-             .select("node", "register",
-                     F.when(F.col("__w__") == 0, F.lit(rho_max))
-                     .otherwise(F.lit(rho_max)
-                                - F.length(F.expr("bin(__w__)")))
-                     .cast("int").alias("rho"))
-             .select("node", F.expr(
-                 f"transform(sequence(0, {m - 1}), "
-                 f"i -> IF(i = register, rho, 0))").alias("rhos"))
-             .localCheckpoint())
-    n_nodes = state.count()
+           .distinct())
+    with pinned(und):
+        h = F.conv(F.substring(F.md5(F.col("node").cast("string")),
+                               1, 15), 16, 10).cast("long")
+        # State is PACKED: one row per node holding all m registers as an
+        # int array (0 = register absent; a real rho is always >= 1).
+        # The skinny (node, register, rho) layout made every round shuffle
+        # |E| x m rows through the merge groupBy — 66M rows per round on a
+        # 520k-edge graph, measured as the entire hyperball cost. Packed,
+        # a round joins |E| rows against a node-bounded broadcast and
+        # shuffles <= |V| partial rows of m register maxes. The register
+        # math (hash, rho, element-wise max, the HLL estimator) is
+        # expression-for-expression the one the oracle replays.
+        state = (und.select(F.col("a").alias("node")).distinct()
+                 .select("node",
+                         F.shiftright(h, rho_bits).cast("int")
+                         .alias("register"),
+                         h.bitwiseAND(F.lit(w_mask)).alias("__w__"))
+                 .select("node", "register",
+                         F.when(F.col("__w__") == 0, F.lit(rho_max))
+                         .otherwise(F.lit(rho_max)
+                                    - F.length(F.expr("bin(__w__)")))
+                         .cast("int").alias("rho"))
+                 .select("node", F.expr(
+                     f"transform(sequence(0, {m - 1}), "
+                     f"i -> IF(i = register, rho, 0))").alias("rhos"))
+                 .localCheckpoint())
+        n_nodes = state.count()
 
-    def nf_micro(st: DataFrame) -> int:
-        # np / s over PRESENT registers only — identical to the
-        # per-row groupBy census of the skinny layout
-        agg = st.select(
-            F.expr("size(filter(rhos, x -> x > 0))").cast("long")
-            .alias("np"),
-            F.expr(f"aggregate(filter(rhos, x -> x > 0), "
-                   f"cast(0 as bigint), (acc, x) -> acc + "
-                   f"shiftleft(cast(1 as bigint), {rho_max} - x))")
-            .alias("s"))
-        vz = F.lit(m).cast("long") - F.col("np")
-        denom = (vz * F.lit(q).cast("long") + F.col("s"))
-        raw = F.lit(numer) / denom.cast("double")
-        lin = F.lit(float(m)) * F.log(F.lit(float(m)) / vz)
-        est = F.when((raw <= 2.5 * m) & (vz > 0), lin).otherwise(raw)
-        return int(agg.select(
-            F.sum(F.round(est * 1e6, 0).cast("long")).alias("nf"))
-            .collect()[0]["nf"])
+        def nf_micro(st: DataFrame) -> int:
+            # np / s over PRESENT registers only — identical to the
+            # per-row groupBy census of the skinny layout
+            agg = st.select(
+                F.expr("size(filter(rhos, x -> x > 0))").cast("long")
+                .alias("np"),
+                F.expr(f"aggregate(filter(rhos, x -> x > 0), "
+                       f"cast(0 as bigint), (acc, x) -> acc + "
+                       f"shiftleft(cast(1 as bigint), {rho_max} - x))")
+                .alias("s"))
+            vz = F.lit(m).cast("long") - F.col("np")
+            denom = (vz * F.lit(q).cast("long") + F.col("s"))
+            raw = F.lit(numer) / denom.cast("double")
+            lin = F.lit(float(m)) * F.log(F.lit(float(m)) / vz)
+            est = F.when((raw <= 2.5 * m) & (vz > 0), lin).otherwise(raw)
+            return int(agg.select(
+                F.sum(F.round(est * 1e6, 0).cast("long")).alias("nf"))
+                .collect()[0]["nf"])
 
-    out = [(0, nf_micro(state))]
-    # element-wise register max across a node's own sketch and its
-    # neighbors' — m combinable max aggregates, repacked to the array
-    reg_max = [F.max(F.element_at(F.col("rhos"), i + 1))
-               .alias(f"__r{i}__") for i in range(m)]
-    repack = F.array(*[F.col(f"__r{i}__") for i in range(m)])
-    try:
+        out = [(0, nf_micro(state))]
+        # element-wise register max across a node's own sketch and its
+        # neighbors' — m combinable max aggregates, repacked to the array
+        reg_max = [F.max(F.element_at(F.col("rhos"), i + 1))
+                   .alias(f"__r{i}__") for i in range(m)]
+        repack = F.array(*[F.col(f"__r{i}__") for i in range(m)])
         for hh in range(1, max_h + 1):
             contrib = (und.join(
                 _maybe_broadcast(
@@ -616,8 +602,6 @@ def hyperball(edges: DataFrame, src_col: str, dst_col: str,
             unpersist_local_checkpoint(prev)
             out.append((hh, nf_micro(state)))
         return out
-    finally:
-        und.unpersist()
 
 
 def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
@@ -651,24 +635,21 @@ def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
     # once instead of replaying its corpus-side derivation per hop
     e = edges.select(F.col(src_col).alias("node"),
                      F.col(dst_col).alias("__dst__"),
-                     F.col(ts_col).alias("__ts__")).persist()
-    if max_hops >= 1 and e.count() <= _driver_edge_valve():
-        # output dtypes after round 1 = the union's coerced schema
-        # (seed-ts vs edge-ts types may widen) — derive it from the
-        # ANALYZED round plan, never recompute it by hand
-        out_schema = (state0.unionByName(
-            e.select(F.col("__dst__").alias("node"),
-                     F.col("__ts__").alias("arrival")))
-            .groupBy("node").agg(F.min("arrival").alias("arrival"))
-            .schema)
-        try:
+                     F.col(ts_col).alias("__ts__"))
+    with pinned(e):
+        if max_hops >= 1 and e.count() <= _driver_edge_valve():
+            # output dtypes after round 1 = the union's coerced
+            # schema (seed-ts vs edge-ts types may widen) — derive it
+            # from the ANALYZED round plan, never recompute it by hand
+            out_schema = (state0.unionByName(
+                e.select(F.col("__dst__").alias("node"),
+                         F.col("__ts__").alias("arrival")))
+                .groupBy("node").agg(F.min("arrival").alias("arrival"))
+                .schema)
             return _temporal_bfs_driver(e, state0, out_schema,
                                         max_hops)
-        finally:
-            e.unpersist()
-    state = state0.localCheckpoint()
-    n_state = state.count()
-    try:
+        state = state0.localCheckpoint()
+        n_state = state.count()
         for _ in range(max_hops):
             # arrival state is node-bounded with a real count:
             # broadcast it so the edge table never shuffles; the
@@ -686,8 +667,6 @@ def temporal_bfs(edges: DataFrame, seeds: DataFrame, src_col: str,
             n_state = state.count()
             unpersist_local_checkpoint(prev)
         return state
-    finally:
-        e.unpersist()
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
@@ -709,8 +688,8 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     # same scan-pinning + count-driven broadcast discipline as
     # ``pagerank`` (see there for the rationale)
     e = edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).persist()
-    try:
+                     F.col(dst_col).alias("dst"))
+    with pinned(e):
         nodes = (e.select(F.col("src").alias("node"))
                  .unionByName(e.select(F.col("dst").alias("node")))
                  .distinct())
@@ -768,5 +747,3 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         if iters > 0:
             unpersist_local_checkpoint(base_nodes)
         return ranks.select("node", "rank")
-    finally:
-        e.unpersist()

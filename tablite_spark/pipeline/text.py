@@ -1059,6 +1059,7 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
     from pyspark.sql import Window
 
     from tablite_spark.functions.buckets import with_range_bucket
+    from tablite_spark.plans.lifecycle import upstream_is_expensive
     spark = df.sparkSession
     cols = [F.col(id_col), F.col(ids_col)]
     if mask_col is not None:
@@ -1080,18 +1081,9 @@ def pack_sequences(df: DataFrame, ids_col: str, id_col: str,
     # join chain, measured as ~2/3 of the query). Pin it once when
     # that upstream is actually expensive to recompute; a plain
     # pruned file scan skips the pin — re-scanning is cheaper than a
-    # cache fill (the spearman_corr discipline, same tag list).
-    # r15: probe the ANALYZED plan, not the optimized one — analysis
-    # already ran eagerly when the DataFrame was built, so this is a
-    # toString of an in-hand tree, while optimizedPlan() ran the
-    # whole optimizer just to make this yes/no call (~0.3 s toll on
-    # the plain-scan twin, r14 VERDICT item 6). The tags are logical
-    # operators that appear identically in both trees.
-    opt = base._jdf.queryExecution().analyzed().toString()
-    if any(t in opt for t in (
-            "Join", "Aggregate", "Window", "Generate", "Expand",
-            "Union", "MapInPandas", "FlatMapGroupsInPandas",
-            "MapGroups", "PythonUDF")):
+    # cache fill (the spearman_corr discipline, same probe). The
+    # result reads the pinned frame, so the pin is a checkpoint.
+    if upstream_is_expensive(base):
         base = base.localCheckpoint()
     tagged = with_range_bucket(base, id_col, "__pid__").withColumn(
         "__nt__", F.size(ids_col))

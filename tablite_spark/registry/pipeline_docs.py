@@ -801,7 +801,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     # sliver (EUROPE suppliers × qualifying parts), the same size
     # class the min-join shuffles anyway. persist (not checkpoint)
     # keeps the lineage in the plan, so the pushdown/broadcast audit
-    # of the pre-pin phase stays visible (test_plans).
+    # of the pre-pin phase stays visible (test_plans). The one direct
+    # persist the pin rule allows (plans.lifecycle); never released.
     oe = oe.persist()
     mn = oe.groupBy(F.col("p_partkey").alias("mk")).agg(
         F.min("unit_cost").alias("mn_cost"))

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tablite_spark.plans.hints import maybe_broadcast
+from tablite_spark.plans.lifecycle import pinned
 from tablite_spark.registry._base import _t
 from tablite_spark.streaming.fixtures import (
     stage_stream_batches, stream_shuffle_partitions)
@@ -1170,15 +1171,13 @@ def bfs_hops_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     # an intermediate distinct would just add a 4th shuffle. The
     # pair frame is scanned by BOTH the seed derivation and the
     # traversal's und build, so pin it for the (eager) call
-    edges = _co_order_pairs(li).select("src", "dst").persist()
-    try:
+    edges = _co_order_pairs(li).select("src", "dst")
+    with pinned(edges):
         nodes = (edges.select(F.col("src").alias("node"))
                  .unionByName(edges.select(F.col("dst").alias("node")))
                  .distinct())
         seeds = nodes.filter(F.col("node") % 13 == 0)
         out = bfs_hops(edges, seeds, "src", "dst", max_hops=3)
-    finally:
-        edges.unpersist()
     return out.select(F.col("node").cast("long").alias("node"),
                       "hops")
 
@@ -1428,40 +1427,43 @@ def assortativity_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     # count-driven broadcast of the node-bounded degree census so the
     # edge frame is never shuffled (shuffle-join fallback past the
     # budget — the 100 TB-safe path).
-    edges = (_co_order_pairs(li).select("src", "dst").distinct()
-             .persist())
-    n_edges = edges.count()
-    und = (edges.select(F.col("src").alias("a"),
-                        F.col("dst").alias("b"))
-           .unionByName(edges.select(F.col("dst").alias("a"),
-                                     F.col("src").alias("b"))))
-    deg = (und.groupBy(F.col("a").alias("n"))
-           .agg(F.count(F.lit(1)).cast("long").alias("d"))
-           .persist())
-    j = (und.join(maybe_broadcast(
-             deg.select(F.col("n").alias("a"),
-                        F.col("d").alias("da")), 2 * n_edges, 24),
-             "a")
-         .join(maybe_broadcast(
-             deg.select(F.col("n").alias("b"),
-                        F.col("d").alias("db")), 2 * n_edges, 24),
-             "b"))
-    agg = j.agg(F.count(F.lit(1)).cast("long").alias("m"),
-                F.sum(F.col("da") * F.col("db")).cast("long")
-                .alias("sxy"),
-                F.sum("da").cast("long").alias("sx"),
-                F.sum(F.col("da") * F.col("da")).cast("long")
-                .alias("sxx"))
-    nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"),
-                 F.max("d").cast("long").alias("max_deg"))
-    num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sx")
-    den = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return (agg.crossJoin(F.broadcast(nn))
-            .select("n_nodes",
-                    (F.col("m") / 2).cast("long").alias("n_edges"),
-                    "max_deg",
-                    (F.round(F.when(den != 0, num / den), 6) + 0)
-                    .alias("assortativity")))
+    # The one result row is checkpointed inside the pins.
+    edges = _co_order_pairs(li).select("src", "dst").distinct()
+    with pinned(edges):
+        n_edges = edges.count()
+        und = (edges.select(F.col("src").alias("a"),
+                            F.col("dst").alias("b"))
+               .unionByName(edges.select(F.col("dst").alias("a"),
+                                         F.col("src").alias("b"))))
+        deg = (und.groupBy(F.col("a").alias("n"))
+               .agg(F.count(F.lit(1)).cast("long").alias("d")))
+        with pinned(deg):
+            j = (und.join(maybe_broadcast(
+                     deg.select(F.col("n").alias("a"),
+                                F.col("d").alias("da")), 2 * n_edges,
+                     24), "a")
+                 .join(maybe_broadcast(
+                     deg.select(F.col("n").alias("b"),
+                                F.col("d").alias("db")), 2 * n_edges,
+                     24), "b"))
+            agg = j.agg(F.count(F.lit(1)).cast("long").alias("m"),
+                        F.sum(F.col("da") * F.col("db")).cast("long")
+                        .alias("sxy"),
+                        F.sum("da").cast("long").alias("sx"),
+                        F.sum(F.col("da") * F.col("da")).cast("long")
+                        .alias("sxx"))
+            nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"),
+                         F.max("d").cast("long").alias("max_deg"))
+            num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sx")
+            den = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
+            return (agg.crossJoin(F.broadcast(nn))
+                    .select("n_nodes",
+                            (F.col("m") / 2).cast("long")
+                            .alias("n_edges"),
+                            "max_deg",
+                            (F.round(F.when(den != 0, num / den), 6) + 0)
+                            .alias("assortativity"))
+                    .localCheckpoint())
 
 
 ROUND14_ORACLES["assortativity_lineitem"] = """
@@ -1878,9 +1880,8 @@ def temporal_reach_lineitem(spark: SparkSession,
                                        .cast("date"))
                             .cast("long").alias("d")), "bk")
              .select(F.col("src").alias("u"),
-                     F.col("dst").alias("v"), "d").distinct()
-             .persist())  # scanned by seeds AND the relax rounds
-    try:
+                     F.col("dst").alias("v"), "d").distinct())
+    with pinned(dated):  # scanned by seeds AND the relax rounds
         und = (dated.select(F.col("u").alias("src"),
                             F.col("v").alias("dst"), "d")
                .unionByName(dated.select(F.col("v").alias("src"),
@@ -1893,8 +1894,6 @@ def temporal_reach_lineitem(spark: SparkSession,
         # pin can release as soon as it returns
         out = temporal_bfs(und, seeds, "src", "dst", "d",
                            max_hops=3)
-    finally:
-        dated.unpersist()
     return out.select(
         F.col("node").cast("long").alias("node"),
         F.expr("cast(date_add(DATE '1970-01-01', "

@@ -113,25 +113,6 @@ def test_bucket_expr_no_interpreted_aggregate_in_plan(spark):
     assert "lambdafunction" not in plan.lower(), plan
 
 
-def test_pin_census_identical_rows_and_single_source_eval(spark):
-    """pin_census returns byte-identical rows, and the census-prefix
-    operators' FINAL plan reads the checkpoint instead of replaying
-    the corpus scan (the r14 optimization: bounds pass + offsets
-    collect + final aggregate each re-evaluated the census — the pin
-    makes the corpus aggregation run exactly once)."""
-    from tablite_spark.functions.buckets import pin_census
-    df = spark.range(10_000).select(
-        (F.col("id") % 997).alias("v"))
-    cens = df.groupBy("v").agg(F.count(F.lit(1)).alias("c"))
-    expect = {(r["v"], r["c"]) for r in cens.collect()}
-    pinned = pin_census(cens)
-    got = {(r["v"], r["c"]) for r in pinned.collect()}
-    assert got == expect
-    # the pinned plan must not re-derive the aggregation
-    plan = pinned._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" not in plan, plan
-
-
 def test_census_prefix_operator_plan_reads_checkpoint(spark, tmp_path):
     """An operator on the census-prefix engine (cusum) over a real
     parquet scan: the returned frame's plan contains ZERO parquet

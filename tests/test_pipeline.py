@@ -168,7 +168,6 @@ def test_lsh_topk_recall(spark):
     assert 99 in got  # near-identical vector lands in the same band
 
 
-@pytest.mark.slow
 def test_embedding_near_dup_pairs(spark):
     vecs = [(0, [1.0, 0.0]), (1, [1.0, 0.001]), (2, [0.0, 1.0])]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")

@@ -70,7 +70,6 @@ def test_sort_pure_text_not_flagged_mixed(spark):
     assert detect_mixed_columns(df, ["v"]) == {"v"}
 
 
-@pytest.mark.slow
 def test_is_sorted(spark):
     df = spark.createDataFrame([(1,), (2,), (3,)], "x int").coalesce(1)
     assert is_sorted(df, {"x": False})
@@ -78,7 +77,6 @@ def test_is_sorted(spark):
     assert not is_sorted(df2, {"x": False})
 
 
-@pytest.mark.slow
 def test_is_sorted_multikey_desc_nulls(spark):
     """Comparator parity with sort(): desc second key, excel null
     placement (nulls last on asc / first on desc)."""

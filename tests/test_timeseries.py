@@ -234,42 +234,6 @@ def test_bloom_decontaminate_empty_probes(spark):
     assert out.count() == 0
 
 
-def test_funnel_single_scan_matches_and_plan(spark, tmp_path):
-    """single_scan=True must (a) reproduce the lazy path byte-for-byte
-    and (b) feed every step from the spilled cache — each FileScan in
-    the lazy chain's plan must sit under an InMemoryRelation (cache
-    population), never as a bare per-step scan of the source."""
-    rows = [
-        (1, "view", _ts(1)), (1, "click", _ts(2)), (1, "purchase", _ts(3)),
-        (2, "view", _ts(1)), (2, "purchase", _ts(2)), (2, "click", _ts(5)),
-        (3, "other", _ts(1)), (3, "view", _ts(2)),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_type string, "
-                                     "ts timestamp")
-    p = str(tmp_path / "ev.parquet")
-    df.write.parquet(p)
-    ev = spark.read.parquet(p)
-    steps = ["view", "click", "purchase"]
-    lazy = sorted(map(tuple, funnel(ev, steps).collect()))
-    eager = sorted(map(tuple, funnel(ev, steps, single_scan=True).collect()))
-    assert eager == lazy
-
-    chain = funnel(ev, steps, single_scan=True, _materialize=False)
-    plan = chain._jdf.queryExecution().executedPlan().toString()
-    try:
-        # every source scan is the cached relation's child (the plan
-        # string inlines it once per InMemoryTableScan) — no bare scan
-        assert plan.count("InMemoryTableScan") > 0
-        assert plan.count("Scan parquet") == plan.count("InMemoryRelation")
-        assert sorted(map(tuple, chain.collect())) == lazy
-    finally:
-        # ADVICE r9: the lazy chain carries its own release handle so
-        # callers never have to clearCache() unrelated caches
-        assert chain.funnel_base.storageLevel.useMemory
-        chain.funnel_unpersist(blocking=True)
-        assert not chain.funnel_base.storageLevel.useMemory
-
-
 def test_interpolate_at_out_col_guard(spark):
     """ADVICE r8: interpolate_at must not silently overwrite a
     pre-existing 'value' column on targets — raise on collision,
